@@ -118,8 +118,8 @@ object PlanAudit {
     println("==== counting-bloom retirement: per-bucket subtract join (O(retired), no state rescan) ====")
     val cbCfg = graft.core.CrawlConfig(bloomBuckets = 8)
     val seenH = docs.select(xxhash64($"doc_id").as("urlHash"))
-    SeenSet.retireFromCounting(
-      SeenSet.buildCountingBlooms(seenH, 1024L, cbCfg),
+    SeenSet.Counting.retire(
+      SeenSet.Counting.build(seenH, 1024L, cbCfg),
       seenH.limit(50), 1024L, cbCfg).explain("formatted")
 
     println("==== source gate: tiny stats agg, AQE-broadcast gate join ====")

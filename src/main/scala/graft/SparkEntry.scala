@@ -1018,11 +1018,11 @@ object SparkEntry {
       val retired = withUrl.filter(pmod(col("doc_id"), lit(3)) =!= 2 &&
         pmod(col("doc_id"), lit(7)) === 1).select("urlHash")
       val ccfg = CrawlConfig(bloomBuckets = 8)
-      val state = frontier.SeenSet.retireFromCounting(
-        frontier.SeenSet.buildCountingBlooms(seen, 1024L, ccfg),
+      val state = frontier.SeenSet.Counting.retire(
+        frontier.SeenSet.Counting.build(seen, 1024L, ccfg),
         retired, 1024L, ccfg)
       val seenAfter = seen.join(retired, Seq("urlHash"), "left_anti")
-      frontier.SeenSet.filterUnseenCounting(withUrl, seenAfter, state, ccfg)
+      frontier.SeenSet.Counting.filterUnseen(withUrl, seenAfter, state, ccfg)
         .select("doc_id").orderBy("doc_id")
     }),
 
@@ -1808,11 +1808,11 @@ object SparkEntry {
       val retired = withUrl.filter(pmod(col("doc_id"), lit(4)) =!= 3 &&
         pmod(col("doc_id"), lit(5)) === 2).select("urlHash")
       val ccfg = CrawlConfig(bloomBuckets = 8)
-      val state = frontier.SeenSet.retireFromCuckoo(
-        frontier.SeenSet.buildCuckoos(seen, 1024L, ccfg),
+      val state = frontier.SeenSet.Cuckoo.retire(
+        frontier.SeenSet.Cuckoo.build(seen, 1024L, ccfg),
         retired, 1024L, ccfg)
       val seenAfter = seen.join(retired, Seq("urlHash"), "left_anti")
-      frontier.SeenSet.filterUnseenCuckoo(withUrl, seenAfter, state, ccfg)
+      frontier.SeenSet.Cuckoo.filterUnseen(withUrl, seenAfter, state, ccfg)
         .select("doc_id").orderBy("doc_id")
     }),
 

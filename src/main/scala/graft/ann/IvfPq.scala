@@ -104,7 +104,7 @@ object IvfPq {
     * prunes partitions at PLANNING time: a 10^9-vector index reads only
     * the nProbe cell directories of 8-byte-code rows per query —
     * bounded scan AND bounded bytes, the §IV deployment. IvfPqSpec
-    * asserts the pruning from the scan's own inputFiles. */
+    * asserts the pruning from the scan's own `numPartitions` metric. */
   def writeIndex(codes: DataFrame, dir: String): Unit =
     codes.write.mode("overwrite").partitionBy("cell").parquet(dir)
 

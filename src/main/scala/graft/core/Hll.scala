@@ -6,7 +6,7 @@ package graft.core
  * the distinct-count analog of the seen Bloom state: "how many distinct
  * URLs has this host contributed across all crawl rounds" in `m` bytes
  * per host instead of a distinct set, with the same incremental
- * carried-state property as [[graft.expr.BloomMergeAgg]]:
+ * carried-state property as the seen Bloom merge (`bloom_merge_agg`):
  *
  *   '''merge = register-wise max''', so merging per-round delta
  *   sketches into carried state is BYTE-IDENTICAL to rebuilding from
@@ -14,7 +14,7 @@ package graft.core
  *   re-adds of already-seen values cannot change any register.
  *
  * Inputs are pre-hashed 64-bit values (callers pass `xxhash64(key)`,
- * the [[graft.expr.BloomFilterAgg]] convention): top `p` bits pick the
+ * the `bloom_agg` convention): top `p` bits pick the
  * register, the leading-zero rank of the rest updates it. Standard
  * error ≈ 1.04/√m (1.6 % at p=12 / 4 KiB).
  */

@@ -1,111 +1,30 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
-import graft.core.Kmv
+import graft.core.{CountMin, Hll, Kmv, TDigest}
 
-/**
- * Mergeable KMV / theta set sketches (see [[graft.core.Kmv]]) — the
- * sketch-family API shape ([[HllAgg]]/[[TDigestAgg]]/[[CountMinAgg]]):
- *
- *  - `kmv_agg(hashedKey, k)` → binary sketch per group;
- *  - `kmv_merge_agg(blob)` → fold same-k blobs (two-level / incremental
- *    aggregation; k-smallest-of-union merge ⇒ any fold order is
- *    byte-identical to a one-shot build);
- *  - `kmv_distinct(blob)` → long distinct estimate (exact below k);
- *  - `kmv_size(blob)` → stored-value count (exact-regime witness);
- *  - `kmv_jaccard(a, b)` / `kmv_union_distinct(a, b)` /
- *    `kmv_intersect_distinct(a, b)` → Beyer et al. SIGMOD'07 set-
- *    operation estimates from two same-k blobs.
- *
- * Keys are pre-hashed LONGs (xxhash64 on the Spark side).
- */
-case class KmvAgg(
-    child: Expression, // LONG pre-hashed key
-    k: Int = 1024,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Kmv] with UnaryLike[Expression] {
+// Codegen'd scalar readers of the sketch blobs built by SketchAgg and
+// SketchMergeAgg: each computes its answer from the serialized bytes.
 
-  override def prettyName: String = "kmv_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"kmv_agg expects a BIGINT pre-hashed key, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): Kmv = Kmv.create(k)
-
-  override def update(buf: Kmv, input: InternalRow): Kmv = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: Kmv, other: Kmv): Kmv = buf.mergeInPlace(other)
-  override def eval(buf: Kmv): Any = buf.serialize()
-  override def serialize(buf: Kmv): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Kmv = Kmv.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KmvAgg =
-    copy(child = c)
-}
-
-/** Fold serialized same-k sketches (see [[KmvAgg]]); null until the
-  * first blob, like [[HllMergeAgg]]/[[CountMinMergeAgg]]. */
-case class KmvMergeAgg(
-    child: Expression, // BINARY serialized sketches, same k
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Kmv] with UnaryLike[Expression] {
-
-  override def prettyName: String = "kmv_merge_agg"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+/** Cardinality estimate of a serialized sketch blob. */
+case class HllEstimate(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = DoubleType
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"kmv_merge_agg expects BINARY sketches, got ${child.dataType.sql}")
-
-  override def createAggregationBuffer(): Kmv = null
-
-  override def update(buf: Kmv, input: InternalRow): Kmv = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val s = Kmv.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) s else buf.mergeInPlace(s)
-    }
-  }
-
-  override def merge(buf: Kmv, other: Kmv): Kmv =
-    if (buf == null) other
-    else if (other == null) buf
-    else buf.mergeInPlace(other)
-
-  override def eval(buf: Kmv): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: Kmv): Array[Byte] =
-    if (buf == null) Array.empty else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Kmv =
-    if (bytes.isEmpty) null else Kmv.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KmvMergeAgg =
+      s"hll_estimate expects BINARY sketch, got ${child.dataType.sql}")
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "hll_estimate"
+  override protected def nullSafeEval(v: Any): Any =
+    Hll.estimateBytes(v.asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.core.Hll.estimateBytes($c)")
+  override protected def withNewChildInternal(c: Expression): HllEstimate =
     copy(child = c)
 }
 
@@ -201,4 +120,80 @@ case class KmvIntersectDistinct(left: Expression, right: Expression)
     defineCodeGen(ctx, ev, (a, b) => s"graft.core.Kmv.intersectDistinctBytes($a, $b)")
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): KmvIntersectDistinct = copy(left = l, right = r)
+}
+
+/** Point-frequency estimate of a pre-hashed key from a sketch blob. */
+case class CountMinQuery(left: Expression, right: Expression)
+  extends BinaryExpression with BinaryLike[Expression] {
+  override def dataType: DataType = LongType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == BinaryType && right.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"count_min_query expects (BINARY, BIGINT), got " +
+        s"(${left.dataType.sql}, ${right.dataType.sql})")
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "count_min_query"
+  override protected def nullSafeEval(b: Any, k: Any): Any =
+    CountMin.estimateBytes(b.asInstanceOf[Array[Byte]], k.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (b, k) => s"graft.core.CountMin.estimateBytes($b, $k)")
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): CountMinQuery = copy(left = l, right = r)
+}
+
+/** Total added weight N of a sketch blob. */
+case class CountMinTotal(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"count_min_total expects BINARY sketch, got ${child.dataType.sql}")
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "count_min_total"
+  override protected def nullSafeEval(v: Any): Any =
+    CountMin.totalBytes(v.asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.core.CountMin.totalBytes($c)")
+  override protected def withNewChildInternal(c: Expression): CountMinTotal =
+    copy(child = c)
+}
+
+/** Interpolated quantile estimate from a serialized digest blob. */
+case class TDigestQuantile(left: Expression, right: Expression)
+  extends BinaryExpression with BinaryLike[Expression] {
+  override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == BinaryType && right.dataType == DoubleType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"tdigest_quantile expects (BINARY, DOUBLE), got " +
+        s"(${left.dataType.sql}, ${right.dataType.sql})")
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "tdigest_quantile"
+  override protected def nullSafeEval(b: Any, q: Any): Any =
+    TDigest.quantileBytes(b.asInstanceOf[Array[Byte]], q.asInstanceOf[Double])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (b, q) => s"graft.core.TDigest.quantileBytes($b, $q)")
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): TDigestQuantile = copy(left = l, right = r)
+}
+
+/** Total observation count of a serialized digest blob. */
+case class TDigestWeight(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"tdigest_weight expects BINARY digest, got ${child.dataType.sql}")
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "tdigest_weight"
+  override protected def nullSafeEval(v: Any): Any =
+    TDigest.weightBytes(v.asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.core.TDigest.weightBytes($c)")
+  override protected def withNewChildInternal(c: Expression): TDigestWeight =
+    copy(child = c)
 }

@@ -91,18 +91,9 @@ object Crawler {
     // the robots table (at 10^10 scale a real table scan per round)
     val robotsK = ck(robots)
 
-    val phaseLog = sys.env.contains("GRAFT_PHASE_LOG")
-    def phase(round: Int, name: String, t: Long): Long = {
-      val now = System.nanoTime()
-      if (phaseLog) System.err.println(
-        f"[crawler] r$round $name: ${(now - t) / 1e9}%.2fs")
-      now
-    }
-
     var round = resumeRound.getOrElse(0) + 1
     while (round <= maxRounds && frontierCount > 0) {
       val t0 = System.nanoTime()
-      var tp = t0
       // ck inside run(): rank, fetch join and discovery each computed once
       val r = CrawlRound.run(round, frontier, pagesKeyed, robotsK, cfg, ck,
         Some(hostFetched))
@@ -116,13 +107,11 @@ object Crawler {
       val fetchedCount = fetched
         .observe(obs, sum(when(!col("fetchOk"), 1L).otherwise(0L)).as("misses"))
         .count()
-      tp = phase(round, "rank+fetch", tp)
       val newSeen = ck(seen.unionByName(delta).repartition(parts, col("urlHash")))
       val newSeenCount = seenCount + fetchedCount // budgeted rows are urlHash-unique
 
       val discovered = r.discovered
       val discoveredCount = discovered.count()
-      tp = phase(round, "discover", tp)
       val bs0 = SeenSet.advance(bloomState, delta, newSeen, newSeenCount, cfg)
       val bs = bs0.copy(blooms = ck(bs0.blooms))
       val fresh = SeenSet.filterUnseen(discovered, newSeen, newSeenCount, cfg,
@@ -130,7 +119,6 @@ object Crawler {
       val nextFrontier = ck(CrawlRound.dedupeCandidates(
         r.deferred.unionByName(fresh)))
       val nextCount = nextFrontier.count()
-      tp = phase(round, "seen+next", tp)
 
       store.foreach { st =>
         st.writeRound(round, nextFrontier, delta,
@@ -173,31 +161,32 @@ object Crawler {
   }
 
   /**
-   * Throughput-oriented drain loop: same semantics as [[crawl]] for the
-   * fetch set (politeness rank → fetch → discover → seen-dedup) but
-   * exactly ONE action per round — the next-frontier count — with every
-   * shared intermediate lazily checkpointed so it materializes inside
-   * that same job, and the per-round fetch count riding the action as an
-   * `observe` metric. The seen-bloom is sized from the running UPPER
-   * BOUND (seen + whole current frontier) since the exact fetched count
-   * is only known after the action — a slightly larger bloom, never a
-   * correctness change. No order rows, no snapshot writes: this is the
-   * steady-state inner loop a 1000-executor drain would run, where
-   * serial driver latency must not gate executor work.
+   * Throughput-oriented drain loop over the same round as [[crawl]]
+   * (politeness rank → fetch → discover → seen-dedup), with two
+   * differences in what it fetches:
+   *  - no cumulative per-site cap: `cfg.maxPagesPerSite` is ignored, as
+   *    no per-host fetched counts are carried between rounds;
+   *  - no probe seeding: `cfg.probeSeeds` is ignored.
+   * With `maxPagesPerSite = Int.MaxValue` and `probeSeeds = false` its
+   * per-round fetch counts equal [[crawl]]'s `RoundMetrics.fetched`
+   * (FastDrainSpec).
+   *
+   * Each round runs one expensive action — the next-frontier count —
+   * with every shared intermediate lazily checkpointed so it
+   * materializes inside that same job, then a trivial count of the
+   * materialized seen set for the round's fetch count. The seen-bloom is
+   * sized from the running UPPER BOUND (seen + whole current frontier)
+   * since the exact fetched count is only known after the action — a
+   * slightly larger bloom, never a correctness change. No order rows, no
+   * snapshot writes, no dedup counts: this is the steady-state inner loop
+   * a 1000-executor drain would run, where serial driver latency must not
+   * gate executor work.
    * Returns (urls fetched, rounds run, per-round fetch counts).
    */
   def fastDrain(spark: SparkSession, pagesKeyed: DataFrame, robots: DataFrame,
                 seeds: DataFrame, cfg: CrawlConfig, maxRounds: Int): (Long, Int, Seq[Long]) = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ckLog = sys.env.contains("GRAFT_CK_LOG")
-    val ck = (df: DataFrame) =>
-      if (!ckLog) df.localCheckpoint(false)
-      else {
-        val t = System.nanoTime()
-        val r = df.localCheckpoint(false) // toRdd: analyze+optimize+codegen NOW
-        System.err.println(f"[ck] ${(System.nanoTime() - t) / 1e9}%.2fs cols=${df.columns.length}")
-        r
-      }
+    val ck = (df: DataFrame) => df.localCheckpoint(false)
     var frontier = ck(CrawlRound.seedFrontier(seeds))
     val robotsK = ck(robots) // one robots scan for the whole drain
     var seen: DataFrame = frontier.select("urlHash").limit(0)
@@ -205,10 +194,8 @@ object Crawler {
     var bloomState: Option[SeenSet.BloomState] = None
     var frontierCount = frontier.count()
     val perRound = scala.collection.mutable.ArrayBuffer[Long]()
-    val phaseLog = sys.env.contains("GRAFT_PHASE_LOG")
     var round = 1
     while (round <= maxRounds && frontierCount > 0) {
-      val t0 = System.nanoTime()
       val r = CrawlRound.run(round, frontier, pagesKeyed, robotsK,
         cfg.copy(keepPayload = false), ck)
       val newSeen = ck(seen.unionByName(r.fetched.select("urlHash"))
@@ -224,14 +211,10 @@ object Crawler {
           Some(bs.blooms)))))
       // the round's one expensive action: materializes (via lazy
       // checkpoints) rank → fetch → discovery → seen union → anti-join
-      val tPlan = System.nanoTime()
       frontierCount = next.count()
-      val tJob = System.nanoTime()
       // trivial follow-up: count of the now-materialized seen RDD —
       // a LogicalRDD scan, no re-analysis of the round's big plans
       val newSeenCount = newSeen.count()
-      if (phaseLog) System.err.println(
-        f"[fastDrain] r$round plan: ${(tPlan - t0) / 1e9}%.2fs job: ${(tJob - tPlan) / 1e9}%.2fs tail: ${(System.nanoTime() - tJob) / 1e9}%.2fs next=$frontierCount")
       perRound += (newSeenCount - seenCount)
       seenCount = newSeenCount
       r.hits.unpersist(); r.raw.unpersist()

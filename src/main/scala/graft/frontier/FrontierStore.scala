@@ -120,11 +120,16 @@ final class FrontierStore(spark: SparkSession, root: String) {
           f.getName != s"base=$base")
         .foreach(f => rm(f.getPath))
     }
+    // only `round=<n>` dirs are snapshots; anything else (a stray
+    // `round=tmp`, a copy in progress) is not ours to parse or delete
     val keepFrom = last - retainFrontiers + 1
+    val snapshot = "round=(\\d{1,9})".r
     val fd = new java.io.File(p("frontier"))
     Option(fd.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("round=") &&
-        f.getName.drop("round=".length).toInt < keepFrom)
+      .filter(f => f.getName match {
+        case snapshot(n) => n.toInt < keepFrom
+        case _ => false
+      })
       .foreach(f => rm(f.getPath))
   }
 

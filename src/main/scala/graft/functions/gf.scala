@@ -78,28 +78,28 @@ object gf {
       expression(path)))
 
   /** HyperLogLog sketch of pre-hashed LONG values (standard error ≈
-    * 1.04/√2^p; see [[graft.expr.HllAgg]]). Returns a binary blob. */
+    * 1.04/√2^p; see [[graft.expr.HllSketch]]). Returns a binary blob. */
   def hll_agg(hashedValues: Column, p: Int = 12): Column =
-    column(HllAgg(expression(hashedValues), p).toAggregateExpression())
+    sketchAgg(HllSketch.Build(p), hashedValues)
 
   /** Register-max merge of same-precision HLL blobs — incremental
     * carried distinct-count state, ≡ full rebuild byte-identically. */
   def hll_merge_agg(sketches: Column): Column =
-    column(HllMergeAgg(expression(sketches)).toAggregateExpression())
+    mergeAgg(HllSketch, sketches)
 
   /** Cardinality estimate of an HLL blob. */
   def hll_estimate(sketch: Column): Column =
     column(HllEstimate(expression(sketch)))
 
   /** t-digest quantile sketch of DOUBLE values (rank error O(1/δ);
-    * see [[graft.expr.TDigestAgg]]). Returns a binary blob. */
+    * see [[graft.expr.TDigestSketch]]). Returns a binary blob. */
   def tdigest_agg(values: Column, delta: Double = 100.0): Column =
-    column(TDigestAgg(expression(values), delta).toAggregateExpression())
+    sketchAgg(TDigestSketch.Build(delta), values)
 
   /** Fold same-δ digest blobs — two-level / incremental quantile state
     * (rank-error bound preserved; bytes are merge-order-dependent). */
   def tdigest_merge_agg(digests: Column): Column =
-    column(TDigestMergeAgg(expression(digests)).toAggregateExpression())
+    mergeAgg(TDigestSketch, digests)
 
   /** Interpolated quantile estimate from a digest blob. */
   def tdigest_quantile(sketch: Column, q: Column): Column =
@@ -111,16 +111,15 @@ object gf {
 
   /** Count-min point-frequency sketch of pre-hashed LONG keys with LONG
     * weights (estimate ≥ true, ≤ true + (e/w)·N w.p. ≥ 1 − e^−d; see
-    * [[graft.expr.CountMinAgg]]). Returns a binary blob. */
+    * [[graft.expr.CountMinSketch]]). Returns a binary blob. */
   def count_min_agg(hashedKeys: Column, weight: Column,
                     depth: Int = 4, width: Int = 256): Column =
-    column(CountMinAgg(expression(hashedKeys), expression(weight),
-      depth, width).toAggregateExpression())
+    sketchAgg(CountMinSketch.Build(depth, width), hashedKeys, weight)
 
   /** Vector-add fold of same-shape count-min blobs — incremental /
     * two-level frequency state, ≡ one-shot build byte-identically. */
   def count_min_merge_agg(sketches: Column): Column =
-    column(CountMinMergeAgg(expression(sketches)).toAggregateExpression())
+    mergeAgg(CountMinSketch, sketches)
 
   /** Point-frequency estimate of a pre-hashed key from a sketch blob. */
   def count_min_query(sketch: Column, hashedKey: Column): Column =
@@ -131,16 +130,16 @@ object gf {
     column(CountMinTotal(expression(sketch)))
 
   /** KMV / theta set sketch of pre-hashed LONG keys — the k smallest
-    * distinct hash values; exact below k (see [[graft.expr.KmvAgg]]).
+    * distinct hash values; exact below k (see [[graft.expr.KmvSketch]]).
     * Unlike HLL, supports set operations: jaccard / union / intersect
     * estimates between two sketches. Returns a binary blob. */
   def kmv_agg(hashedKeys: Column, k: Int = 1024): Column =
-    column(KmvAgg(expression(hashedKeys), k).toAggregateExpression())
+    sketchAgg(KmvSketch.Build(k), hashedKeys)
 
   /** k-smallest-of-union fold of same-k KMV blobs — incremental /
     * two-level distinct state, ≡ one-shot build byte-identically. */
   def kmv_merge_agg(sketches: Column): Column =
-    column(KmvMergeAgg(expression(sketches)).toAggregateExpression())
+    mergeAgg(KmvSketch, sketches)
 
   /** Distinct-count estimate of a KMV blob (exact below k). */
   def kmv_distinct(sketch: Column): Column =
@@ -219,63 +218,62 @@ object gf {
   /** Partitioned-Bloom seen-set aggregate (SURVEY.md §2.10): builds a
     * serialized BloomFilter over LONG inputs. */
   def bloom_agg(values: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    column(BloomFilterAgg(expression(values), expression(lit(expectedItems)), fpp)
-      .toAggregateExpression())
+    sketchAgg(BloomSketch.Build(expectedItems, fpp), values)
 
   /** OR-merge serialized BloomFilters of identical shape (incremental
-    * seen-bloom state — see [[graft.expr.BloomMergeAgg]]). */
-  def bloom_merge_agg(blooms: Column): Column =
-    column(BloomMergeAgg(expression(blooms)).toAggregateExpression())
+    * seen-bloom state — see [[graft.expr.SketchMergeAgg]]). */
+  def bloom_merge_agg(blooms: Column): Column = mergeAgg(BloomSketch, blooms)
 
   /** Mergeable SpaceSaving frequent-items sketch: array of
     * (item, est, err, total) sorted by est desc — see
-    * [[graft.expr.SpaceSavingAgg]] for bounds and the 100 TB shape. */
+    * [[graft.expr.SpaceSavingSketch]] for bounds and the 100 TB shape. */
   def space_saving_agg(item: Column, weight: Column, capacity: Int): Column =
-    column(SpaceSavingAgg(expression(item), expression(weight),
-      expression(lit(capacity))).toAggregateExpression())
+    sketchAgg(SpaceSavingSketch.Build(capacity), item, weight)
 
   /** Test a LONG against a serialized BloomFilter column. */
   def might_contain(bloom: Column, value: Column): Column =
-    column(MightContainLong(expression(bloom), expression(value)))
+    column(SketchMightContain(expression(bloom), expression(value), BloomSketch))
 
   /** Counting-Bloom (deletable seen pre-filter) aggregate over LONGs —
-    * see [[graft.expr.CountingBloomAgg]] / [[graft.core.CountingBloom]]. */
+    * see [[graft.expr.CountingBloomSketch]] / [[graft.core.CountingBloom]]. */
   def cbloom_agg(values: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    column(CountingBloomAgg(expression(values), expression(lit(expectedItems)), fpp)
-      .toAggregateExpression())
+    sketchAgg(CountingBloomSketch.Build(expectedItems, fpp), values)
 
   /** Vector-ADD merge of same-shape serialized counting filters. */
-  def cbloom_merge_agg(cbfs: Column): Column =
-    column(CountingBloomMergeAgg(expression(cbfs)).toAggregateExpression())
+  def cbloom_merge_agg(cbfs: Column): Column = mergeAgg(CountingBloomSketch, cbfs)
 
   /** Retire a deletion batch (a counting filter over deleted keys) from
     * counting-filter state: element-wise subtraction. */
   def cbloom_subtract(state: Column, delta: Column): Column =
-    column(CbloomSubtract(expression(state), expression(delta)))
+    column(SketchSubtract(expression(state), expression(delta), CountingBloomSketch))
 
   /** Test a LONG against a serialized counting filter. */
   def cbloom_might_contain(cbf: Column, value: Column): Column =
-    column(CbloomMightContain(expression(cbf), expression(value)))
+    column(SketchMightContain(expression(cbf), expression(value), CountingBloomSketch))
 
   /** Cuckoo-filter (compact deletable seen pre-filter) aggregate over
-    * LONGs — see [[graft.expr.CuckooAgg]] / [[graft.core.CuckooFilter]]
+    * LONGs — see [[graft.expr.CuckooSketch]] / [[graft.core.CuckooFilter]]
     * for the answer-identity merge contract. */
   def cuckoo_agg(values: Column, expectedItems: Long): Column =
-    column(CuckooAgg(expression(values), expression(lit(expectedItems)))
-      .toAggregateExpression())
+    sketchAgg(CuckooSketch.Build(expectedItems), values)
 
   /** Multiset-union merge of same-shape serialized cuckoo filters. */
-  def cuckoo_merge_agg(ckfs: Column): Column =
-    column(CuckooMergeAgg(expression(ckfs)).toAggregateExpression())
+  def cuckoo_merge_agg(ckfs: Column): Column = mergeAgg(CuckooSketch, ckfs)
 
   /** Retire a deletion batch (a cuckoo filter over deleted keys) from
     * cuckoo state: remove one fingerprint copy per delta entry. */
   def cuckoo_subtract(state: Column, delta: Column): Column =
-    column(CuckooSubtract(expression(state), expression(delta)))
+    column(SketchSubtract(expression(state), expression(delta), CuckooSketch))
 
   /** Test a LONG against a serialized cuckoo filter. */
   def cuckoo_might_contain(ckf: Column, value: Column): Column =
-    column(CuckooMightContain(expression(ckf), expression(value)))
+    column(SketchMightContain(expression(ckf), expression(value), CuckooSketch))
+
+  private def sketchAgg(codec: SketchCodec[_], inputs: Column*): Column =
+    column(SketchAgg(inputs.map(expression), codec).toAggregateExpression())
+
+  private def mergeAgg[T >: Null](format: SketchFormat[T], blobs: Column): Column =
+    column(SketchMergeAgg(expression(blobs), format).toAggregateExpression())
 
   /** URL identity per north rule: xxhash64 of canonical form. */
   def url_id(url: Column): Column = xxhash64(canonicalize_url(url))

@@ -8,7 +8,7 @@ import graft.functions.gf
 
 /**
  * Streaming incremental per-source token-frequency sketches: a
- * `foreachBatch` fold of [[graft.expr.CountMinAgg]] blobs — each
+ * `foreachBatch` fold of `count_min_agg` blobs ([[graft.expr.CountMinSketch]]) — each
  * micro-batch of (source, tok) rows aggregates to per-source count-min
  * deltas, merged into the carried state via `count_min_merge_agg`
  * WITHOUT rescanning earlier batches. The streaming twin of the q121

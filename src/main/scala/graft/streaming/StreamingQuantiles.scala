@@ -8,7 +8,7 @@ import graft.functions.gf
 
 /**
  * Streaming incremental per-source quantile profiles: a `foreachBatch`
- * fold of [[graft.expr.TDigestAgg]] digests — each micro-batch of
+ * fold of `tdigest_agg` digests ([[graft.expr.TDigestSketch]]) — each micro-batch of
  * (source, value) rows aggregates to per-source digest deltas, which
  * merge into the carried per-source state via `tdigest_merge_agg`
  * WITHOUT rescanning earlier batches. The streaming twin of the q118

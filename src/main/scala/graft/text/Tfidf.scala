@@ -485,6 +485,10 @@ object PrunedQuadLm {
     val mUni = mw.select(explode(col("__ws")).as("term"))
     val cu = mUni.groupBy("term").agg(count(lit(1)).as("__cu"))
     val total = mUni.agg(count(lit(1)).cast("double").as("__t"))
+    // every backoff rung divides by T: an empty model must fail by name
+    // here, not as an ANSI divide-by-zero inside the scoring job
+    require(total.head().getDouble(0) > 0,
+      "PrunedQuadLm.score: the model corpus has no tokens (T = 0)")
     val a = lit(alpha)
     val scored = gramsOf(evalBase, 4, Seq(col(idCol)))
       .join(c4, Seq("w1", "w2", "w3", "w4"), "left")

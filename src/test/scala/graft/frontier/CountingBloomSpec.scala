@@ -64,17 +64,17 @@ class CountingBloomSpec extends SparkTestBase {
     val r = retired.toDF("urlHash")
 
     // add: merge(state, delta) == build(seen0 ∪ delta)
-    val merged = SeenSet.addToCounting(
-      SeenSet.buildCountingBlooms(s0, cap, cfg), d, cap, cfg)
-    val rebuiltU = SeenSet.buildCountingBlooms(s0.unionByName(d), cap, cfg)
+    val merged = SeenSet.Counting.add(
+      SeenSet.Counting.build(s0, cap, cfg), d, cap, cfg)
+    val rebuiltU = SeenSet.Counting.build(s0.unionByName(d), cap, cfg)
     val m1 = bytesByBucket(merged); val m2 = bytesByBucket(rebuiltU)
     assert(m1.keySet == m2.keySet)
     m1.foreach { case (k, v) => assert(v.sameElements(m2(k)), s"bucket $k add") }
 
     // retire: subtract(state, retired) == build(seen0 ∖ retired)
-    val retiredState = SeenSet.retireFromCounting(
-      SeenSet.buildCountingBlooms(s0, cap, cfg), r, cap, cfg)
-    val rebuiltR = SeenSet.buildCountingBlooms(
+    val retiredState = SeenSet.Counting.retire(
+      SeenSet.Counting.build(s0, cap, cfg), r, cap, cfg)
+    val rebuiltR = SeenSet.Counting.build(
       s0.join(r, Seq("urlHash"), "left_anti"), cap, cfg)
     val r1 = bytesByBucket(retiredState); val r2 = bytesByBucket(rebuiltR)
     assert(r1.keySet == r2.keySet)
@@ -86,9 +86,9 @@ class CountingBloomSpec extends SparkTestBase {
     val cands = (0L until 1500L).map(_ * 37 + 5) // first 1000 seen
     val seenDf = seen.toDF("urlHash")
     val candDf = cands.toDF("urlHash")
-    val state = SeenSet.buildCountingBlooms(seenDf, 512L, cfg)
+    val state = SeenSet.Counting.build(seenDf, 512L, cfg)
 
-    val got = SeenSet.filterUnseenCounting(candDf, seenDf, state, cfg)
+    val got = SeenSet.Counting.filterUnseen(candDf, seenDf, state, cfg)
       .select("urlHash").as[Long].collect().toSet
     val want = cands.toSet -- seen.toSet
     assert(got == want)
@@ -96,9 +96,9 @@ class CountingBloomSpec extends SparkTestBase {
     // retire every 10th seen hash → those urls must pass the filter again
     // WITHOUT touching the rest (plain blooms would need a full rebuild)
     val retired = seen.filter(_ % 10 == 3)
-    val state2 = SeenSet.retireFromCounting(state, retired.toDF("urlHash"), 512L, cfg)
+    val state2 = SeenSet.Counting.retire(state, retired.toDF("urlHash"), 512L, cfg)
     val seen2 = seenDf.join(retired.toDF("urlHash"), Seq("urlHash"), "left_anti")
-    val got2 = SeenSet.filterUnseenCounting(candDf, seen2, state2, cfg)
+    val got2 = SeenSet.Counting.filterUnseen(candDf, seen2, state2, cfg)
       .select("urlHash").as[Long].collect().toSet
     assert(got2 == (cands.toSet -- seen.toSet) ++ retired.toSet)
   }
@@ -116,9 +116,9 @@ class CountingBloomSpec extends SparkTestBase {
     val changedHashes = plan.urlDiff.filter(col("status") === "changed")
       .select("urlHash")
 
-    val state = SeenSet.buildCountingBlooms(seen, 64L, cfg)
-    val state2 = SeenSet.retireFromCounting(state, changedHashes, 64L, cfg)
-    val readmitted = SeenSet.filterUnseenCounting(
+    val state = SeenSet.Counting.build(seen, 64L, cfg)
+    val state2 = SeenSet.Counting.retire(state, changedHashes, 64L, cfg)
+    val readmitted = SeenSet.Counting.filterUnseen(
       seen.select("urlHash"), plan.retiredSeen, state2, cfg)
       .as[Long].collect().toSet
     val wantChanged = changedHashes.as[Long].collect().toSet

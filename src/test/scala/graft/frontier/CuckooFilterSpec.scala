@@ -93,14 +93,14 @@ class CuckooFilterSpec extends SparkTestBase {
     val s0 = seen0.toDF("urlHash"); val d = delta.toDF("urlHash")
     val r = retired.toDF("urlHash")
 
-    val merged = SeenSet.addToCuckoo(
-      SeenSet.buildCuckoos(s0, cap, cfg), d, cap, cfg)
-    val rebuiltU = SeenSet.buildCuckoos(s0.unionByName(d), cap, cfg)
+    val merged = SeenSet.Cuckoo.add(
+      SeenSet.Cuckoo.build(s0, cap, cfg), d, cap, cfg)
+    val rebuiltU = SeenSet.Cuckoo.build(s0.unionByName(d), cap, cfg)
     assert(answersByBucket(merged) == answersByBucket(rebuiltU), "add-merge")
 
-    val retiredState = SeenSet.retireFromCuckoo(
-      SeenSet.buildCuckoos(s0, cap, cfg), r, cap, cfg)
-    val rebuiltR = SeenSet.buildCuckoos(
+    val retiredState = SeenSet.Cuckoo.retire(
+      SeenSet.Cuckoo.build(s0, cap, cfg), r, cap, cfg)
+    val rebuiltR = SeenSet.Cuckoo.build(
       s0.join(r, Seq("urlHash"), "left_anti"), cap, cfg)
     assert(answersByBucket(retiredState) == answersByBucket(rebuiltR), "retire")
   }
@@ -110,16 +110,16 @@ class CuckooFilterSpec extends SparkTestBase {
     val cands = (0L until 1500L).map(_ * 37 + 5) // first 1000 seen
     val seenDf = seen.toDF("urlHash")
     val candDf = cands.toDF("urlHash")
-    val state = SeenSet.buildCuckoos(seenDf, 512L, cfg)
+    val state = SeenSet.Cuckoo.build(seenDf, 512L, cfg)
 
-    val got = SeenSet.filterUnseenCuckoo(candDf, seenDf, state, cfg)
+    val got = SeenSet.Cuckoo.filterUnseen(candDf, seenDf, state, cfg)
       .select("urlHash").as[Long].collect().toSet
     assert(got == cands.toSet -- seen.toSet)
 
     val retired = seen.filter(_ % 10 == 3)
-    val state2 = SeenSet.retireFromCuckoo(state, retired.toDF("urlHash"), 512L, cfg)
+    val state2 = SeenSet.Cuckoo.retire(state, retired.toDF("urlHash"), 512L, cfg)
     val seen2 = seenDf.join(retired.toDF("urlHash"), Seq("urlHash"), "left_anti")
-    val got2 = SeenSet.filterUnseenCuckoo(candDf, seen2, state2, cfg)
+    val got2 = SeenSet.Cuckoo.filterUnseen(candDf, seen2, state2, cfg)
       .select("urlHash").as[Long].collect().toSet
     assert(got2 == (cands.toSet -- seen.toSet) ++ retired.toSet)
   }

@@ -100,4 +100,13 @@ class PrunedQuadLmSpec extends SparkTestBase {
     // doc 11's quad has count 2 — survives ⇒ identical
     assert(pruned(11L) == unpruned(11L))
   }
+
+  test("an empty model corpus fails by name, not as an ANSI division by zero") {
+    val ev = evalDocs.toDF("doc_id", "text")
+    for (empty <- Seq(Seq.empty[(Long, String)], Seq((0L, ""))).map(_.toDF("doc_id", "text"))) {
+      val e = intercept[IllegalArgumentException](
+        PrunedQuadLm.score(ev, empty, "doc_id", "text").collect())
+      assert(e.getMessage.contains("PrunedQuadLm.score: the model corpus has no tokens"))
+    }
+  }
 }
